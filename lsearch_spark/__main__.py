@@ -55,7 +55,9 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--within", default=None, metavar="PREDICATE",
                    help="metadata filter over docs columns, e.g. \"lang = 'en'\"")
     s.add_argument("--stats", action="store_true", help="per-query stats (reference --stats, cli.rs:510-512)")
-    s.add_argument("--strats", action="store_true", help="print the plan summary (reference --strats, cli.rs:439-441)")
+    s.add_argument("--strats", action="store_true",
+                   help="print the plan search() executes, after running its planning jobs "
+                        "but not the scoring job (reference --strats, cli.rs:439-441)")
 
     ph = sub.add_parser("phrase", help="exact-phrase BM25 top-k (positions)")
     ph.add_argument("--warehouse", required=True)
@@ -129,7 +131,8 @@ def main(argv: list[str] | None = None) -> int:
         from .query import plan_summary, search, search_with_stats
 
         if args.strats:
-            print(plan_summary(spark, args.warehouse, args.query, k=args.k, mode=args.mode, prune=args.prune))
+            print(plan_summary(spark, args.warehouse, args.query, k=args.k, mode=args.mode,
+                               prune=args.prune, within=args.within))
         if args.stats:
             rows, info = search_with_stats(
                 spark, args.warehouse, args.query, k=args.k, mode=args.mode,

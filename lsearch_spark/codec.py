@@ -123,11 +123,6 @@ def u64_to_i64_order(u: np.ndarray) -> np.ndarray:
     return (np.ascontiguousarray(u, dtype=np.uint64) ^ _SIGN).view(np.int64)
 
 
-def encode_ids_signed(sorted_ids: np.ndarray) -> bytes:
-    """int64 ids, sorted ascending in signed order."""
-    return varint_encode(delta_encode(i64_to_u64_order(sorted_ids)))
-
-
 def decode_ids_signed(buf: bytes) -> np.ndarray:
     return u64_to_i64_order(delta_decode(varint_decode(buf)))
 

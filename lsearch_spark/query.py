@@ -55,7 +55,8 @@ alone is provably weak (all exactness-preserving):
   verify a posteriori that the anti-joined k-th score still >= tau
   (then every returned score is exact and nothing pruned can displace
   or tie it — see inline proof in search()); on shortfall the query
-  reruns exhaustively, and the fallback is recorded in query_metrics.
+  reruns exhaustively, the fallback is recorded in query_metrics, and
+  the plan memo keeps the exhaustive plan for the shape's repeats.
   Impact LADDERS (term_block_stats.impact_ladder, (max, min) wand
   sampled at power-of-two block ranks) extend tau formation to ANY
   depth (_deep_kth_wand), so even "-<99%-df term>" forms a tau.
@@ -77,10 +78,20 @@ alone is provably weak (all exactness-preserving):
   ONE numpy pass (_decode_score_partials); only (doc_id, score, hits)
   partials cross Arrow, and the JVM merely finishes the partial sums.
 
+Every per-query planning decision lives in ONE planner (_plan_query),
+which returns one QueryPlan value: the positive and exclusion strategy,
+tau/thetas, k_eff, the verify flag and the cost estimates. search()
+executes it, plan_summary() (the reference's --strats analog,
+cli.rs:326-341) prints it after running the same planning jobs (term
+metadata read, within count, probe) but not the scoring job, and
+batch_search() forms its per-query thetas with the same pure
+tau/theta function (_tau_thetas).
+
 Per-query instrumentation (the reference's --stats analog,
-cli.rs:14-96, dump at cli.rs:510-512): `search_with_stats` records
-blocks decoded / total, postings decoded, and wall time per query to
-the warehouse's query_metrics table.
+cli.rs:14-96, dump at cli.rs:510-512): `search_with_stats` records the
+plan value's strategy and tau, blocks decoded / total, postings
+decoded, and wall time per query to the warehouse's query_metrics
+table.
 """
 
 from __future__ import annotations
@@ -90,6 +101,7 @@ import re
 import time
 import uuid
 from collections.abc import Iterator
+from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
@@ -371,31 +383,25 @@ def _replay_cached_batch(spark: SparkSession, wh: Warehouse, hit: dict) -> DataF
     return out.orderBy("query_id", F.desc("score"), F.asc("doc_id"))
 
 
-def _replay_cached_search(spark: SparkSession, st: dict, hit: dict) -> DataFrame:
+def _replay_cached_search(spark: SparkSession, wh: Warehouse, st: dict, pkey: tuple, hit: dict) -> DataFrame:
     """Serve a repeated query from its memoized plan. kind='df' returns
     the lazy plan as-is (collect re-executes it). kind='verify'
     (pruned negation / within) RE-RUNS the pruned job and the
     a-posteriori verification on every call — only the plan and tau are
-    reused, never the rows — and falls back to the (memoized lazy)
-    exhaustive plan on a shortfall, exactly like the first call."""
+    reused, never the rows. A shortfall replaces the entry with the
+    exhaustive plan (kind='df'; exact for any data): the memo dies with
+    the warehouse state on append, so the same shortfall would recur and
+    pay the pruned job on top of the exhaustive one on every call."""
     if hit["kind"] == "df":
         return hit["df"]
+    query, k, mode, _prune, _probe, with_url, within = pkey
     rows = hit["pre"].collect()
-    if len(rows) == hit["k"] and float(rows[-1]["score"]) >= hit["tau"]:
-        topk = _values_df(
-            spark,
-            [f"({int(r['doc_id'])}L, {_sql_double(r['score'])})" for r in rows],
-            "doc_id, score",
-        )
-    else:
-        fb = hit.get("fallback")
-        if fb is None:
-            fb = hit["fallback_fn"]()
-            hit["fallback"] = fb
-        topk = fb
-    if hit["with_url"]:
-        topk = _attach_url(spark, st, hit["root"], topk)
-    return topk
+    if not _verified(rows, k, hit["tau"]):
+        exact = search(spark, wh, query, k=k, mode=mode, prune=False, with_url=with_url, within=within)
+        _plan_cache_put(st, pkey, {"kind": "df", "df": exact})
+        return exact
+    topk = _rows_df(spark, rows)
+    return _attach_url(spark, st, wh.root, topk) if with_url else topk
 
 
 def _term_buckets(spark: SparkSession, st: dict, terms: list[str]) -> dict[str, int]:
@@ -549,14 +555,6 @@ def _idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def _neg_docs(spark, wh, st, neg: list[str]) -> DataFrame | None:
-    if not neg:
-        return None
-    # no distinct(): LEFT ANTI is set-semantics already — deduping a
-    # stopword's half-million ids would add a full shuffle for nothing
-    return _decode_blocks_ids_only(_postings_for(spark, wh, st, neg))
-
-
 # Negation docset fast path ceiling: below this many excluded postings
 # the driver fetches the raw doc_ids blobs in ONE column-pruned job
 # (~2.5 bytes/id compressed), decodes them vectorized, and broadcasts
@@ -602,20 +600,16 @@ def _ids_per_term(spark, wh, st, terms: list[str]) -> dict[str, np.ndarray]:
     return {t: cache[t] for t in terms}
 
 
-def _neg_docset(spark, wh, st, neg: list[str], dfs: dict[str, int]):
-    """(broadcast sorted np.int64 exclusion ids) | None when over the
-    size gate. Memoized per warehouse + term set — repeat queries with
-    the same exclusion reuse the broadcast."""
-    live_neg = sorted(t for t in neg if t in dfs)
-    if not live_neg:
-        return None
-    if sum(dfs[t] for t in live_neg) > _NEG_DOCSET_MAX_POSTINGS:
-        return None
-    key = tuple(live_neg)
+def _neg_docset(spark, wh, st, neg: list[str]):
+    """Broadcast sorted np.int64 exclusion ids of the live '-term's (the
+    planner already checked their volume against _NEG_DOCSET_MAX_POSTINGS).
+    Memoized per warehouse + term set — repeat queries with the same
+    exclusion reuse the broadcast."""
+    key = tuple(sorted(neg))
     cache = st.setdefault("docset_bc", {})
     if key in cache:
         return cache[key]
-    per_term = _ids_per_term(spark, wh, st, live_neg)
+    per_term = _ids_per_term(spark, wh, st, list(key))
     arrs = [a for a in per_term.values() if a.size]
     ids = np.unique(np.concatenate(arrs)) if arrs else np.empty(0, np.int64)
     bc = spark.sparkContext.broadcast(ids.astype(np.int64))
@@ -629,7 +623,7 @@ def _neg_docset(spark, wh, st, neg: list[str], dfs: dict[str, int]):
 _NEG_RANGE_MAX_CAND = 200_000
 
 
-def _neg_range_prune(spark, wh, st, neg: list[str], dfs: dict[str, int], live: list[str]):
+def _neg_range_prune(spark, wh, st, neg: list[str], live: list[str]) -> DataFrame:
     """The scale plan for tiny-positive / huge-exclusion negation
     ('w0003 -the' at web scale): instead of decoding the excluded
     term's ENTIRE doc_ids (O(df_neg) — the last O(corpus) query shape),
@@ -641,34 +635,29 @@ def _neg_range_prune(spark, wh, st, neg: list[str], dfs: dict[str, int], live: l
     ~min(df_pos, n_blocks) surviving blocks: O(df_pos) work however hot
     the excluded term is.
 
-    Returns the pruned excluded-ids DataFrame when the shape qualifies
-    (all gates driver-side from term_stats: candidates fit a broadcast,
-    the exclusion is >=4x larger than the positive side so the prune
-    pays, and the BNLJ probe product is bounded), else None (caller
-    falls back to the full-decode LEFT ANTI). The candidate set is an
-    ids-only decode of the POSITIVE terms' postings (cheaper than the
-    scoring decode, and a superset of any pruned positive plan's
+    Returns the pruned excluded-ids DataFrame for the live '-term's
+    (the planner already checked _neg_range_eligible). The candidate set
+    is an ids-only decode of the POSITIVE terms' postings (cheaper than
+    the scoring decode, and a superset of any pruned positive plan's
     candidates — sound for exclusion whichever plan scores)."""
-    if not _neg_range_eligible(spark, wh, st, neg, dfs, live):
-        return None
-    live_neg = sorted(t for t in neg if t in dfs)
     cand = _decode_blocks_ids_only(_postings_for(spark, wh, st, live)).distinct()
-    blocks = _range_semi_join(_postings_for(spark, wh, st, live_neg), cand)
+    blocks = _range_semi_join(_postings_for(spark, wh, st, sorted(neg)), cand)
     return _decode_blocks_ids_only(blocks)
 
 
 def _neg_range_eligible(spark, wh, st, neg, dfs, live) -> bool:
-    """ALL the _neg_range_prune gates, driver-side only — shared with
-    plan_summary so --strats reports exactly the plan search() will run."""
-    live_neg = sorted(t for t in neg if t in dfs)
-    if not live_neg or "min_doc_id" not in st["postings_rel"].columns:
+    """ALL the _neg_range_prune gates for the live '-term's and positive
+    terms, driver-side from term stats: candidates fit a broadcast, the
+    exclusion is >=4x larger than the positive side so the prune pays,
+    and the BNLJ probe product is bounded."""
+    if "min_doc_id" not in st["postings_rel"].columns:
         return False
-    sum_pos = sum(dfs[t] for t in live if t in dfs)
-    sum_neg = sum(dfs[t] for t in live_neg)
+    sum_pos = sum(dfs[t] for t in live)
+    sum_neg = sum(dfs[t] for t in neg)
     if sum_pos == 0 or sum_pos > _NEG_RANGE_MAX_CAND or sum_neg <= 4 * sum_pos:
         return False
-    bs = _term_block_stats(spark, st, wh, live_neg)
-    if len(bs) != len(live_neg):
+    bs = _term_block_stats(spark, st, wh, neg)
+    if len(bs) != len(neg):
         return False
     return sum_pos * sum(b["n_blocks"] for b in bs.values()) <= _PHRASE_BNLJ_MAX
 
@@ -730,6 +719,7 @@ def _agg_topk(
     k: int,
     within_docs: DataFrame | None = None,
     unique_docs: bool = False,
+    penalties: DataFrame | None = None,
 ) -> DataFrame:
     """Final aggregation over (doc_id, score, hits) partials. hits sums
     to the number of distinct query terms a doc matched (each (term,
@@ -737,7 +727,9 @@ def _agg_topk(
     on partials exactly as it did on per-posting rows. within_docs (the
     metadata-filter docset) restricts candidates by LEFT SEMI — the
     mirror of the neg anti-join; AQE broadcasts a small docset and falls
-    back to a shuffle join at scale.
+    back to a shuffle join at scale. penalties (doc_id, penalty) are the
+    fully-decoded '~less' sums, subtracted from the surviving candidates
+    (less terms never add candidates).
 
     unique_docs=True (single positive term, unsegmented index) skips the
     groupBy SHUFFLE STAGE entirely: each doc has exactly one (term, doc)
@@ -761,47 +753,79 @@ def _agg_topk(
         agg = agg.join(neg_docs, "doc_id", "left_anti")
     if within_docs is not None:
         agg = agg.join(within_docs, "doc_id", "left_semi")
+    if penalties is not None:
+        agg = agg.join(penalties, "doc_id", "left").withColumn(
+            "score", F.col("score") - F.coalesce(F.col("penalty"), F.lit(0.0))
+        )
     # TakeOrderedAndProject: per-partition heap + driver merge, no global sort
     return agg.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def _thetas_for_tau(
-    live: list[str], idf_map: dict[str, float], ub: dict[str, float], sum_ub: float,
-    tau: float, ub_corr: float,
-) -> dict[str, float]:
-    """Per-term stored-block_max_wand thresholds: a block of term t can
-    hold a >=tau doc only if idf_t * bmax_stored * ub_corr + UB_others
-    >= tau, i.e. bmax_stored >= (tau - UB_others) / (idf_t * ub_corr)."""
-    return {t: (tau - (sum_ub - ub[t])) / (idf_map[t] * ub_corr) for t in live}
+def _block_size(st: dict) -> int:
+    return int(st["cfg"].get("block_size") or 128)
 
 
-def _wand_thetas(
-    live: list[str], idf_map: dict[str, float], bstats: dict[str, dict], k: int,
-    ratio: float = 1.0, block_size: int = 128,
-):
-    """Driver-side WAND plan: (per-term theta dict | None, tau).
-
-    tau = max over terms of idf_t * top_wands_t[k-1]: each of a term's k
-    largest block maxima is achieved by a distinct real doc, so at least
-    k docs have a true score >= tau -> tau lower-bounds the k-th best.
-    None means "no pruning possible" (missing stats, or k beyond the
-    stored top_wands) — the caller then runs the plain exhaustive scan.
-    tau is shaved by a relative epsilon so driver-side float rounding can
-    never exceed the executor-side true k-th score.
-
-    ratio = current avgdl / stored WAND-basis avgdl (config.wand_avgdl):
+def _wand_ratio(st: dict) -> float:
+    """Current avgdl / stored WAND-basis avgdl (config.wand_avgdl):
     appends drift avgdl while stored block stats keep the build basis.
     wand(A_q)/wand(A_w) is bounded by [min(1, A_q/A_w), max(1, A_q/A_w)]
     (the dl/avgdl term is the only avgdl-dependence and is monotone), so
     scaling upper bounds by max(1, ratio) and tau by min(1, ratio) keeps
     pruning EXACT under any drift — just slightly less aggressive."""
-    if not live or not all(t in bstats for t in live):
-        # without EVERY term's upper bound the pruning inequality is not
-        # sound (sum_others would be underestimated) -> no pruning
-        return None, float("-inf")
-    ub_corr, tau_corr = max(1.0, ratio), min(1.0, ratio)
+    avgdl = float(st["stats"]["avgdl"])
+    return avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
+
+
+def _keep_frac(n_docs: int, n_within: int | None, neg_df: int) -> float:
+    """Estimated fraction of tau's witnesses that survive a within docset
+    (|S|/n, exact from the count job) and '-term' exclusions (sum of
+    df_neg/n, capped just below 1 — an impossible depth simply yields no
+    tau). An independence heuristic only: it tunes the verify-fallback
+    rate through _k_eff, never correctness."""
+    keep = 1.0 if n_within is None else min(1.0, n_within / max(n_docs, 1))
+    if neg_df:
+        keep *= 1.0 - min(1.0 - 1e-9, neg_df / max(n_docs, 1))
+    return keep
+
+
+def _k_eff(k: int, keep_frac: float) -> int:
+    """Witness depth for a tau that must survive a filter keeping
+    keep_frac of the docs: proportionally deeper so ~k witnesses survive
+    DESPITE binomial noise (margin 4*sqrt(k)+4 puts the shortfall
+    probability well under 1%; a bare k/keep was measured to fall back
+    ~25% of the time). Beyond the stored top_wands depth, impact ladders
+    extend tau to any depth (so even "physics -the", k_eff ~ 1300, forms
+    a tau); the a-posteriori verification keeps results exact either way."""
+    if keep_frac >= 1.0:
+        return k
+    return math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / max(keep_frac, 1e-9))
+
+
+def _thetas_for_tau(
+    live: list[str], idf_map: dict[str, float], bstats: dict[str, dict], tau: float, ratio: float,
+) -> dict[str, float]:
+    """Per-term stored-block_max_wand thresholds: a block of term t can
+    hold a >=tau doc only if idf_t * bmax_stored * ub_corr + UB_others
+    >= tau, i.e. bmax_stored >= (tau - UB_others) / (idf_t * ub_corr)."""
+    ub_corr = max(1.0, ratio)
     ub = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr for t in live}
     sum_ub = sum(ub.values())
+    return {t: (tau - (sum_ub - ub[t])) / (idf_map[t] * ub_corr) for t in live}
+
+
+def _wand_tau(
+    live: list[str], idf_map: dict[str, float], bstats: dict[str, dict], k: int,
+    ratio: float, block_size: int,
+) -> float:
+    """Driver-side WAND tau (-inf when none forms).
+
+    tau = max over terms of idf_t * top_wands_t[k-1]: each of a term's k
+    largest block maxima is achieved by a distinct real doc, so at least
+    k docs have a true score >= tau -> tau lower-bounds the k-th best.
+    tau is shaved by a relative epsilon so driver-side float rounding can
+    never exceed the executor-side true k-th score, and scaled by
+    min(1, ratio) (_wand_ratio)."""
+    tau_corr = min(1.0, ratio)
     tau = float("-inf")
     for t in live:
         tw = bstats[t]["top_wands"]
@@ -815,9 +839,54 @@ def _wand_thetas(
             if deep is not None:
                 tau = max(tau, idf_map[t] * deep * tau_corr)
     if tau == float("-inf"):
-        return None, tau
-    tau -= abs(tau) * 1e-9 + 1e-12  # float-safety margin (still a lower bound)
-    return _thetas_for_tau(live, idf_map, ub, sum_ub, tau, ub_corr), tau
+        return tau
+    return tau - (abs(tau) * 1e-9 + 1e-12)  # float-safety margin (still a lower bound)
+
+
+def _tau_thetas(
+    live: list[str], less: list[str], idf_map: dict[str, float], bstats: dict[str, dict],
+    k: int, keep_frac: float, ratio: float, block_size: int,
+) -> tuple[int, dict[str, float] | None, float]:
+    """One query's (k_eff, thetas | None, tau), purely driver-side: the
+    witness depth for the filter's keep fraction, the WAND tau at that
+    depth, the '~less' correction, then the per-term thetas. The query
+    planner and batch_search's per-query thetas / route-out estimates
+    both call this, so they always agree. None means "no pruning
+    possible" (a term without stats — the pruning inequality would
+    underestimate sum_others — or no tau at this depth): the caller runs
+    the plain exhaustive scan.
+
+    '~less' correction: tau lower-bounds the k-th best POSITIVE sum (k
+    distinct witness docs); each witness loses at most sum_t(idf_t *
+    ub_wand_t) to the penalties, so tau - sum(UB_less) lower-bounds the
+    k-th best FINAL score, and a top-k doc's positive sum >= its final
+    >= tau. The positive-side block filter argument then applies
+    verbatim; penalties are always decoded in full, so every kept doc's
+    final score is exact."""
+    k_eff = _k_eff(k, keep_frac)
+    if not live or not all(t in bstats for t in live + less):
+        return k_eff, None, float("-inf")
+    tau = _wand_tau(live, idf_map, bstats, k_eff, ratio, block_size)
+    if tau == float("-inf"):
+        return k_eff, None, tau
+    tau -= sum(idf_map[t] * bstats[t]["ub_wand"] * max(1.0, ratio) for t in less)
+    return k_eff, _thetas_for_tau(live, idf_map, bstats, tau, ratio), tau
+
+
+def _routing_cost(
+    bstats: dict[str, dict], thetas: dict[str, float], imp: set[str], terms: list[str]
+) -> tuple[int, int, bool]:
+    """(est_kept, total, routed plan pays) for a theta-filtered scan of
+    terms. The ladder estimators bound the blocks the thetas KEEP (2x
+    tight for impact-routed terms, sound top_wands bound for cold ones;
+    theta <= 0 keeps everything). Unless that cuts >40% of the candidate
+    blocks, the plain exhaustive scan is strictly cheaper than the
+    filtered/routed plan (no filter evaluation, no union, no impact read)
+    — measured 1.15s vs 1.37s on "of and" with the single-term tau at
+    600k docs."""
+    est = sum(_est_kept_blocks(bstats[t], thetas[t], t in imp) for t in terms)
+    tot = sum(bstats[t]["n_blocks"] for t in terms)
+    return est, tot, est < 0.6 * tot
 
 
 def _deep_kth_wand(bs: dict, k: int, block_size: int) -> float | None:
@@ -869,32 +938,31 @@ def _block_filter(terms: list[str], thetas: dict[str, float]):
     return reduce(lambda a, b: a | b, conds)
 
 
+def _split_scan(st: dict, terms: list[str], imp: set[str], cond) -> DataFrame:
+    """Bucket-partition-pruned block scan where hot terms (imp) read
+    their impact-ordered copy (kind=1 partition) and cold terms their
+    doc_id-ordered blocks, each side filtered by cond(its terms) pushed
+    into the parquet scan."""
+    parts = []
+    for rel, ts in (
+        (st["postings_rel"], [t for t in terms if t not in imp]),
+        (st["impact_rel"], [t for t in terms if t in imp]),
+    ):
+        if ts:
+            bks = sorted({st["buckets"][t] for t in ts})
+            parts.append(rel.filter(F.col("bucket").isin(bks) & cond(ts)))
+    return reduce(DataFrame.unionByName, parts)
+
+
 def _routed_blocks(st: dict, live: list[str], thetas: dict[str, float], imp: set[str]) -> DataFrame:
     """The theta-filtered routed scan (one shared implementation behind
     search, AND-mode search and batch_search): hot terms read a
-    block_max_wand-filtered prefix of their impact-ordered copy (kind=1
-    partition), cold terms their doc_id-ordered blocks, both
-    bucket-partition-pruned with the theta comparison pushed into the
-    parquet scan."""
-    sel = ["term", "n_docs", "doc_ids", "tfs", "doc_lens"]
-    hot = [t for t in live if t in imp]
-    cold = [t for t in live if t not in imp]
-    parts = []
-    if cold:
-        bks = sorted({st["buckets"][t] for t in cold})
-        parts.append(
-            st["postings_rel"]
-            .filter(F.col("bucket").isin(bks) & _block_filter(cold, thetas))
-            .select(*sel)
-        )
-    if hot:
-        bks = sorted({st["buckets"][t] for t in hot})
-        parts.append(
-            st["impact_rel"]
-            .filter(F.col("bucket").isin(bks) & _block_filter(hot, thetas))
-            .select(*sel)
-        )
-    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    block_max_wand-filtered prefix of their impact-ordered copy, cold
+    terms their doc_id-ordered blocks, with the theta comparison pushed
+    into the parquet scan."""
+    return _split_scan(st, live, imp, lambda ts: _block_filter(ts, thetas)).select(
+        "term", "n_docs", "doc_ids", "tfs", "doc_lens"
+    )
 
 
 def _impact_terms(spark, st: dict, wh: Warehouse) -> set[str]:
@@ -964,98 +1032,57 @@ _PROBE_MIN_POSTINGS = 4_000_000
 _PHRASE_BNLJ_MAX = 50_000_000
 
 
-def _probe_tau(spark, st: dict, hot_live: list[str], idf_map: dict[str, float],
-               avgdl: float, k: int, target_postings: int = 8192) -> float:
-    """Refine tau with ONE small extra job: decode the top ~target_postings
-    impact postings per hot query term, aggregate the partial BM25 sums
-    per doc, take the k-th best. Every partial sum is achieved by a real
-    doc (missing terms/blocks only lower it), so the k-th best partial is
-    a valid lower bound on the true k-th best score — far tighter than
-    the single-term bound for multi-stopword queries (measured at 600k
-    docs, "of and": probe tau 0.2005 vs single-term 0.1530, true k-th
-    0.2029). This is the candidate pass of MaxScore, expressed as a
-    prefix scan of the impact lists.
+def _probe_tau(spark, st: dict, wh: Warehouse, terms: list[str], idf_map: dict[str, float],
+               avgdl: float, k: int, conjunctive: bool = False, target_postings: int = 8192) -> float:
+    """Refine tau with ONE small extra job: decode a ~target_postings
+    prefix of every term's postings — the impact-ordered copy's head for
+    hot terms (highest-wand postings first), the doc_id-ordered head
+    otherwise — aggregate the partial BM25 sums per doc and take the
+    k-th best (-inf when fewer than k docs qualify). This is the
+    candidate pass of MaxScore, expressed as a prefix scan.
 
-    Depth matters: the refined tau comes from docs present in SEVERAL
-    terms' prefixes, and for independent-ish term frequencies that
-    overlap grows with prefix_depth^2 / n_docs — a 2k prefix measured
-    only ~8 overlapping docs at 600k (tau collapsed to the single-term
-    bound) while 8k yields ~10x more."""
-    block_size = int(st["cfg"].get("block_size") or 128)
+    Disjunctive (the hot terms of an OR query): every partial sum is
+    achieved by a real doc (missing terms/blocks only lower it), so the
+    k-th best partial is a valid lower bound on the true k-th best score
+    — far tighter than the single-term bound for multi-stopword queries
+    (measured at 600k docs, "of and": probe tau 0.2005 vs single-term
+    0.1530, true k-th 0.2029). Depth matters: the refined tau comes from
+    docs present in SEVERAL terms' prefixes, and for independent-ish
+    term frequencies that overlap grows with prefix_depth^2 / n_docs — a
+    2k prefix measured only ~8 overlapping docs at 600k (tau collapsed
+    to the single-term bound) while 8k yields ~10x more.
+
+    conjunctive=True (VERDICT r4 #7, MaxScore for AND; every live term):
+    only docs that matched ALL terms WITHIN the prefix count. Each such
+    doc genuinely contains every query term (each (term, doc) posting
+    exists exactly once per routed copy, and every term routes to
+    exactly one copy here, so hits == n_terms <=> all terms present),
+    and its prefix sum only misses pruned-away positive contributions,
+    so k such docs prove the true k-th best CONJUNCTIVE score >= the
+    k-th best prefix sum -> a valid tau for the AND block filter.
+    Selective conjunctions rarely fill k (the candidate-driven plan
+    handles those)."""
     n_salts = max(1, int(st["cfg"].get("n_salts") or 1))
-    per_salt = max(4, -(-target_postings // (block_size * n_salts)))
-    probe = st["impact_rel"].filter(
-        F.col("bucket").isin(sorted({st["buckets"][t] for t in hot_live}))
-        & F.col("term").isin(hot_live)
-        & (F.col("block_id") < per_salt)
+    per_salt = max(4, -(-target_postings // (_block_size(st) * n_salts)))
+    probe = _split_scan(
+        st, terms, _impact_terms(spark, st, wh),
+        lambda ts: F.col("term").isin(ts) & (F.col("block_id") < per_salt),
     )
-    rows = (
-        _decode_score_partials(probe, {t: idf_map[t] for t in hot_live}, avgdl)
-        .groupBy("doc_id").agg(F.sum("score").alias("s"))
-        .orderBy(F.desc("s")).limit(k).collect()
-    )
-    if len(rows) < k:
-        return float("-inf")
-    s = float(rows[-1]["s"])
-    return s - abs(s) * 1e-9 - 1e-12
-
-
-def _probe_tau_and(spark, st: dict, wh: Warehouse, live: list[str],
-                   idf_map: dict[str, float], avgdl: float, k: int,
-                   target_postings: int = 8192) -> float:
-    """Conjunctive tau (VERDICT r4 #7, MaxScore for AND): ONE small job
-    decodes a prefix of EVERY live term's postings — the impact-ordered
-    copy's head for hot terms (highest-wand postings first), the
-    doc_id-ordered head otherwise — keeps only docs that matched ALL
-    terms WITHIN the prefix, and returns the k-th best partial sum.
-
-    Validity: each such doc genuinely contains every query term (each
-    (term, doc) posting exists exactly once per routed copy, and every
-    term routes to exactly one copy here, so hits == n_terms <=> all
-    terms present), and its prefix sum only misses pruned-away positive
-    contributions, so it lower-bounds the doc's true score. k such docs
-    therefore prove the true k-th best CONJUNCTIVE score >= the k-th
-    best prefix sum -> a valid tau for the AND block filter. Returns
-    -inf when fewer than k all-term docs appear in the prefix (selective
-    conjunctions — the candidate-driven plan handles those)."""
-    block_size = int(st["cfg"].get("block_size") or 128)
-    n_salts = max(1, int(st["cfg"].get("n_salts") or 1))
-    per_salt = max(4, -(-target_postings // (block_size * n_salts)))
-    imp = _impact_terms(spark, st, wh)
-    hot = [t for t in live if t in imp]
-    cold = [t for t in live if t not in imp]
-    parts = []
-    if hot:
-        parts.append(
-            st["impact_rel"].filter(
-                F.col("bucket").isin(sorted({st["buckets"][t] for t in hot}))
-                & F.col("term").isin(hot)
-                & (F.col("block_id") < per_salt)
-            )
-        )
-    if cold:
-        parts.append(
-            st["postings_rel"].filter(
-                F.col("bucket").isin(sorted({st["buckets"][t] for t in cold}))
-                & F.col("term").isin(cold)
-                & (F.col("block_id") < per_salt)
-            )
-        )
-    probe = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    rows = (
-        _decode_score_partials(probe, {t: idf_map[t] for t in live}, avgdl)
+    agg = (
+        _decode_score_partials(probe, {t: idf_map[t] for t in terms}, avgdl)
         .groupBy("doc_id")
         .agg(F.sum("score").alias("s"), F.sum("hits").alias("h"))
-        .filter(F.col("h") == len(live))
-        .orderBy(F.desc("s")).limit(k).collect()
     )
+    if conjunctive:
+        agg = agg.filter(F.col("h") == len(terms))
+    rows = agg.orderBy(F.desc("s")).limit(k).collect()
     if len(rows) < k:
         return float("-inf")
     s = float(rows[-1]["s"])
     return s - abs(s) * 1e-9 - 1e-12
 
 
-def _and_candidate_blocks(spark, wh: Warehouse, st: dict, live: list[str], dfs: dict[str, int]):
+def _and_candidate_blocks(spark, wh: Warehouse, st: dict, live: list[str], rare: str) -> DataFrame:
     """Candidate-driven conjunction — the selective-AND scale plan
     ('w0003 AND the' at web scale): every AND result must contain the
     RAREST term, so its doc_ids (one ids-only column-pruned decode,
@@ -1070,14 +1097,8 @@ def _and_candidate_blocks(spark, wh: Warehouse, st: dict, live: list[str], dfs: 
     semi-join -> candidates get complete scores and hit counts. A
     non-candidate doc lacks the rare term entirely, so its hit count
     can never reach n_terms and the AND filter drops it regardless of
-    which of its blocks were decoded. Returns the pruned block scan, or
-    None when the shape doesn't qualify (gates all driver-side from
-    term_stats, mirroring _neg_range_eligible: candidates fit the
-    broadcast, the others are >=4x larger so the prune pays, and the
-    BNLJ probe product is bounded)."""
-    rare = _and_candidate_rare(spark, wh, st, live, dfs)
-    if rare is None:
-        return None
+    which of its blocks were decoded. rare is the seed the planner
+    picked (_and_candidate_rare)."""
     others = [t for t in live if t != rare]
     cand = _decode_blocks_ids_only(_postings_for(spark, wh, st, [rare])).distinct()
     oblocks = _range_semi_join(_postings_for(spark, wh, st, others), cand)
@@ -1085,9 +1106,10 @@ def _and_candidate_blocks(spark, wh: Warehouse, st: dict, live: list[str], dfs: 
 
 
 def _and_candidate_rare(spark, wh: Warehouse, st: dict, live: list[str], dfs: dict[str, int]):
-    """_and_candidate_blocks' driver-side gates (shared with plan_summary
-    so --strats reports exactly the plan search() will run): the seed
-    term when the shape qualifies, else None."""
+    """_and_candidate_blocks' driver-side gates, all from term stats
+    (mirroring _neg_range_eligible: candidates fit the broadcast, the
+    others are >=4x larger so the prune pays, and the BNLJ probe product
+    is bounded): the seed term when the shape qualifies, else None."""
     if "min_doc_id" not in st["postings_rel"].columns:
         return None
     rare = min(live, key=lambda t: dfs[t])
@@ -1103,6 +1125,257 @@ def _and_candidate_rare(spark, wh: Warehouse, st: dict, live: list[str], dfs: di
     if df_r * sum(b["n_blocks"] for b in bs.values()) > _PHRASE_BNLJ_MAX:
         return None
     return rare
+
+
+@dataclass
+class QueryPlan:
+    """One query's resolved plan: the single value search() executes,
+    plan_summary() prints and search_with_stats() records.
+
+    strategy (positive side): 'empty' (statically no result),
+    'exhaustive', 'routed' / 'routed+probe' (OR block-max WAND; thetas
+    set), 'and-candidate[+neg][+less]' (seed set) or 'and-probe'
+    (conjunctive probe tau; thetas set). neg_plan (exclusion side):
+    'docset-kernel', 'range-anti' or 'anti-join'; None without a live
+    '-term'. verify: the pruned result needs the a-posteriori check
+    (its tau was deepened for an exclusion or a within docset). tau is
+    -inf when none formed; it is recorded even when the cost gate kept
+    the plan exhaustive."""
+
+    query: str  # after wildcard / fuzzy rewrite
+    k: int
+    mode: str
+    pos: list[str]  # parsed positive terms, including ones not in the corpus
+    neg: list[str]  # '-term's in the corpus
+    less: list[str]  # '~term's in the corpus
+    dfs: dict[str, int]
+    idf: dict[str, float]  # positive and '~less' terms in the corpus
+    within_docs: DataFrame | None = None
+    n_within: int | None = None
+    strategy: str = "exhaustive"
+    neg_plan: str | None = None
+    k_eff: int = 0
+    tau: float = float("-inf")
+    thetas: dict[str, float] | None = None
+    impact: frozenset = frozenset()  # live terms read from their impact-ordered copy
+    seed: str | None = None
+    verify: bool = False
+    est_kept_blocks: int | None = None
+    blocks_total: int | None = None
+
+    @property
+    def live(self) -> list[str]:
+        return [t for t in self.pos if t in self.dfs]
+
+    @property
+    def label(self) -> str:
+        return self.strategy + (f"+{self.neg_plan}" if self.neg_plan else "")
+
+
+def _within_docs(spark, wh: Warehouse, within: DataFrame | str | None) -> DataFrame | None:
+    """The within docset as a doc_id relation: a predicate over docs
+    METADATA is pushed down into the parquet scan (only doc_id + the
+    referenced columns are read)."""
+    if within is None:
+        return None
+    if isinstance(within, str):
+        return catalog.read_table(spark, wh.root, "docs").filter(F.expr(within)).select("doc_id")
+    return within.select("doc_id")
+
+
+def _plan_query(
+    spark, wh: Warehouse, st: dict, query: str, k: int, mode: str, prune: bool,
+    probe: bool | str, within: DataFrame | str | None,
+) -> QueryPlan:
+    """Every per-query planning decision, in one place. Runs only the
+    planning jobs: the rewrite's vocabulary lookup, the term metadata
+    read (dfs + block summaries in one collect for unknown terms; the
+    term hash is driver-side), the within count and the probe."""
+    if _needs_rewrite(query):
+        query = expand_wildcards(spark, wh, query)
+    pos, neg, less = parse_query(query)
+    n_docs = int(st["stats"]["n_docs"])
+    dfs: dict[str, int] = {}
+    if pos:
+        _term_buckets(spark, st, pos + neg + less)
+        dfs = _term_dfs(spark, st, wh, pos + less + neg)
+    p = QueryPlan(
+        query=query, k=k, mode=mode, pos=pos,
+        neg=[t for t in neg if t in dfs], less=[t for t in less if t in dfs], dfs=dfs,
+        idf={t: _idf(n_docs, dfs[t]) for t in pos + less if t in dfs},
+        within_docs=_within_docs(spark, wh, within), k_eff=k,
+    )
+    live = p.live
+    bstats = _term_block_stats(spark, st, wh, live + p.less) if live else {}  # served by the dfs read
+    p.blocks_total = sum(bstats[t]["n_blocks"] for t in live if t in bstats) or None
+    if not live or (mode == "and" and len(live) < len(pos)):
+        p.strategy = "empty"
+        return p
+    if p.neg:
+        # '-term' exclusion, three exact plans by shape (all from term
+        # stats): small exclusion -> docset fast path (driver-decoded
+        # broadcast ids applied inside the decode kernel); tiny positive
+        # + huge exclusion -> range-pruned anti-join (broadcast range
+        # semi-join on excluded block metadata, O(df_pos) decode); else
+        # distributed LEFT ANTI over the full excluded-ids decode (the
+        # plan that always fits memory)
+        if sum(dfs[t] for t in p.neg) <= _NEG_DOCSET_MAX_POSTINGS:
+            p.neg_plan = "docset-kernel"
+        elif _neg_range_eligible(spark, wh, st, p.neg, dfs, live):
+            p.neg_plan = "range-anti"
+        else:
+            p.neg_plan = "anti-join"
+    if prune and (mode == "or" or len(live) == 1):
+        _plan_or(spark, wh, st, p, bstats, probe)  # single-term AND == OR
+    elif prune:
+        _plan_and(spark, wh, st, p, bstats, probe)
+    if p.strategy == "empty":
+        p.neg_plan = None
+    p.verify = (
+        p.strategy not in ("empty", "exhaustive")
+        and (bool(p.neg) or p.within_docs is not None)
+        and p.tau > float("-inf")
+    )
+    return p
+
+
+def _plan_or(spark, wh: Warehouse, st: dict, p: QueryPlan, bstats: dict, probe: bool | str) -> None:
+    """Disjunctive block-max WAND. Negation and within prune with a
+    deeper tau (_keep_frac/_k_eff) and an A-POSTERIORI verification in
+    search(): exactness never depends on the witnesses surviving the
+    anti-join or the docset. '~less' prunes by LOWERING tau by the less
+    terms' total upper bound (_tau_thetas). neg+less / within+less
+    COMPOSE (r7): the deeper-tau k_eff and the less correction stack —
+    tau then lower-bounds the k-th best FINAL score among survivors, and
+    the verification (surviving k-th FINAL score >= the composed tau)
+    covers any correlation, exactly as for plain negation."""
+    live, n_docs = p.live, int(st["stats"]["n_docs"])
+    if p.within_docs is not None:
+        # the docset knocks out witnesses exactly like exclusion does;
+        # its selectivity is EXACT (one narrow count job on the
+        # pushed-down scan)
+        p.n_within = p.within_docs.count()
+        if p.n_within == 0:
+            p.strategy = "empty"
+            return
+    keep = _keep_frac(n_docs, p.n_within, sum(p.dfs[t] for t in p.neg))
+    ratio = _wand_ratio(st)
+    p.k_eff, thetas, p.tau = _tau_thetas(live, p.less, p.idf, bstats, p.k, keep, ratio, _block_size(st))
+    if thetas is None:
+        return
+    imp = _impact_terms(spark, st, wh)
+    hot_live = [t for t in live if t in imp]
+    # probe gate: (a) the single-term tau leaves some hot term
+    # essentially unpruned (even its K_TOP-th best block survives) AND
+    # (b) at most two terms carry the upper-bound mass — with >=3
+    # balanced hot terms NO tau can prune (theta_t = (tau -
+    # UB_others)/idf_t stays below every block max because UB_others
+    # alone approaches any achievable tau), so the probe job would be
+    # pure overhead (measured +0.5s on 3-term queries)
+    weak = any(
+        t in imp
+        and bstats[t]["n_blocks"] > 2 * len(bstats[t]["top_wands"])
+        and thetas[t] <= bstats[t]["top_wands"][-1]
+        for t in live
+    )
+    ubs = sorted((p.idf[t] * bstats[t]["ub_wand"] * max(1.0, ratio) for t in live), reverse=True)
+    two_term_shaped = sum(ubs[2:]) <= 0.15 * (sum(ubs[:2]) or 1.0)
+    est_postings = sum(bstats[t]["n_blocks"] for t in live) * _block_size(st)
+    probe_worth = probe is True or (probe == "auto" and est_postings >= _PROBE_MIN_POSTINGS)
+    probed = bool(weak and two_term_shaped and len(live) > 1 and hot_live and probe_worth and not p.less)
+    if probed:
+        tau2 = _probe_tau(spark, st, wh, hot_live, p.idf, float(st["stats"]["avgdl"]), p.k_eff)
+        if tau2 > p.tau:
+            p.tau, thetas = tau2, _thetas_for_tau(live, p.idf, bstats, tau2, ratio)
+    # probe=True forces the routed plan regardless of the cost gate
+    # (callers use it to exercise/evidence the at-scale path)
+    p.est_kept_blocks, _, pays = _routing_cost(bstats, thetas, imp, live)
+    if probe is True or pays:
+        # routed scan: hot terms read a tau-prefix of their impact-ordered
+        # copy, cold terms the doc_id-ordered blocks
+        p.strategy = "routed+probe" if probed else "routed"
+        p.thetas, p.impact = thetas, frozenset(hot_live)
+
+
+def _plan_and(spark, wh: Warehouse, st: dict, p: QueryPlan, bstats: dict, probe: bool | str) -> None:
+    """Conjunctive pruning (VERDICT r4 #7), two exact plans by shape:
+
+    1. CANDIDATE-DRIVEN (selective AND, 'w0003 the'): the rarest term's
+       ids bound the result set; other terms' blocks are
+       range-semi-joined against them before any decode -> O(df_rare)
+       whatever the other terms' df. No tau involved.
+    2. PROBE TAU (conjunctive stopword pair, 'of and'): the k-th best
+       ALL-TERMS-HIT partial sum over a one-job prefix scan lower-bounds
+       the true conjunctive k-th best, and the OR block filter (theta_t
+       from the SUM of all terms' UBs) applies verbatim: a true-AND doc
+       with score >= tau keeps every block (exact score AND complete hit
+       count -> it survives the n_terms_hit filter), while any doc that
+       lost a block has true score < tau and either fails the hit filter
+       or ranks below the >= k exact docs. Its validity is a-priori.
+
+    AND+neg and AND+less compose with plan 1 ONLY (VERDICT r5 #6, r7):
+    the candidate-driven plan enumerates EVERY conjunctive match with a
+    complete, exact positive score, so dropping excluded docs afterwards
+    (whichever exclusion plan) and subtracting fully-decoded '~less'
+    penalties leaves every survivor exact — no tau, no verification.
+    Plan 2's tau is a-priori valid only for the UNfiltered conjunctive
+    k-th best and has no less correction, so those shapes stay
+    exhaustive when they miss plan 1's selectivity gate. within composes
+    with plan 2 (r7): the probe asks for proportionally deeper witnesses
+    (the OR path's k_eff) and search()'s a-posteriori verification makes
+    the filtered result exact at any filter/term correlation."""
+    live = p.live
+    p.seed = _and_candidate_rare(spark, wh, st, live, p.dfs)
+    if p.seed is not None:
+        p.strategy = "and-candidate" + ("+neg" if p.neg else "") + ("+less" if p.less else "")
+        return
+    if p.neg or p.less or not all(t in bstats for t in live):
+        return
+    est_postings = sum(bstats[t]["n_blocks"] for t in live) * _block_size(st)
+    if not (probe is True or (probe == "auto" and est_postings >= _PROBE_MIN_POSTINGS)):
+        return
+    if p.within_docs is not None:
+        p.n_within = p.within_docs.count()
+        if p.n_within == 0:
+            p.strategy = "empty"
+            return
+    p.k_eff = _k_eff(p.k, _keep_frac(int(st["stats"]["n_docs"]), p.n_within, 0))
+    p.tau = _probe_tau(spark, st, wh, live, p.idf, float(st["stats"]["avgdl"]), p.k_eff, conjunctive=True)
+    if p.tau == float("-inf"):
+        return
+    thetas = _thetas_for_tau(live, p.idf, bstats, p.tau, _wand_ratio(st))
+    imp = _impact_terms(spark, st, wh)
+    p.est_kept_blocks, _, pays = _routing_cost(bstats, thetas, imp, live)
+    if probe is True or pays:
+        p.strategy = "and-probe"
+        p.thetas, p.impact = thetas, frozenset(t for t in live if t in imp)
+
+
+def _observe_blocks(blocks: DataFrame, stats: dict) -> DataFrame:
+    """Count the blocks and postings a scoring job decodes; the
+    *_with_stats wrappers read stats["_obs"] after the action."""
+    from pyspark.sql import Observation
+
+    obs = Observation(f"qstats_{uuid.uuid4().hex[:12]}")
+    stats["_obs"] = obs
+    return blocks.observe(
+        obs, F.count(F.lit(1)).alias("blocks_decoded"), F.sum("n_docs").alias("postings_decoded")
+    )
+
+
+def _verified(rows: list, k: int, tau: float) -> bool:
+    """The a-posteriori check of a pruned negation / within result."""
+    return len(rows) == k and float(rows[-1]["score"]) >= tau
+
+
+def _rows_df(spark: SparkSession, rows: list) -> DataFrame:
+    """Verified top-k rows as a LocalRelation: rows are already (score
+    DESC, doc_id ASC), a LocalRelation preserves insertion order on
+    collect, and re-sorting k rows through orderBy would cost a
+    range-partitioning sampling job."""
+    return _values_df(
+        spark, [f"({int(r['doc_id'])}L, {_sql_double(r['score'])})" for r in rows], "doc_id, score"
+    )
 
 
 def search(
@@ -1177,409 +1450,124 @@ def search(
         pkey = (query, int(k), mode, bool(prune), probe, bool(with_url), within)
         hit = st.setdefault("plans", {}).get(pkey)
         if hit is not None:
-            return _replay_cached_search(spark, st, hit)
+            return _replay_cached_search(spark, wh, st, pkey, hit)
 
     def _cache_df(df: DataFrame) -> DataFrame:
         if pkey is not None:
             _plan_cache_put(st, pkey, {"kind": "df", "df": df})
         return df
 
-    if _needs_rewrite(query):
-        query = expand_wildcards(spark, wh, query)
-    pos, neg, less = parse_query(query)
+    plan = _plan_query(spark, wh, st, query, k, mode, prune, probe, within)
     if _stats is not None:
-        _stats.update({"query": query, "k": k, "mode": mode, "prune": prune, "terms": [], "tau": None})
-    if not pos:
+        _stats["_plan"] = plan
+    if plan.strategy == "empty":
         return _cache_df(_empty_results(spark))
+    live, within_docs = plan.live, plan.within_docs
+    avgdl = float(st["stats"]["avgdl"])
 
-    stats = st["stats"]
-    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-    _term_buckets(spark, st, pos + neg + less)  # one hash job for all terms
-    dfs = _term_dfs(spark, st, wh, pos + less + neg)
-    live = [t for t in pos if t in dfs]
-    live_less = [t for t in less if t in dfs]
-    if _stats is not None:
-        _stats["terms"] = live
-    if not live or (mode == "and" and len(live) < len(pos)):
-        return _cache_df(_empty_results(spark))
-    idf_map = {t: _idf(n_docs, dfs[t]) for t in live}
-
-    within_docs = None
-    if within is not None:
-        if isinstance(within, str):
-            # predicate over docs METADATA: pushed down into the parquet
-            # scan (only doc_id + referenced columns are read)
-            within_docs = (
-                catalog.read_table(spark, wh.root, "docs")
-                .filter(F.expr(within))
-                .select("doc_id")
-            )
-        else:
-            within_docs = within.select("doc_id")
-        if _stats is not None:
-            _stats["within"] = within if isinstance(within, str) else "<docset>"
-
-    blocks = _postings_for(spark, wh, st, live)
-    # '-term' exclusion, three plans by shape (all driver-decided from
-    # term_stats): small exclusion -> docset fast path (driver-decoded
-    # broadcast ids applied inside the decode kernel); tiny positive +
-    # huge exclusion -> range-pruned anti-join (broadcast range semi-join
-    # on excluded block metadata, O(df_pos) decode — kills the last
-    # O(corpus) query shape); else distributed LEFT ANTI over the full
-    # excluded-ids decode (the fallback that always fits memory)
-    excl_bc = _neg_docset(spark, wh, st, neg, dfs) if neg else None
-    neg_docs, neg_plan = None, None
-    if neg and excl_bc is None:
-        neg_docs = _neg_range_prune(spark, wh, st, neg, dfs, live)
-        neg_plan = "range-anti" if neg_docs is not None else "anti-join"
-        if neg_docs is None:
-            neg_docs = _neg_docs(spark, wh, st, neg)
-    if _stats is not None and neg:
-        _stats["neg_plan"] = "docset-kernel" if excl_bc is not None else neg_plan
-        # exclusion-side cost, per plan: the docset path's ids are on the
-        # driver (exact count now); the distributed plans get an
-        # Observation on the ids decode (read back in search_with_stats)
-        if excl_bc is not None:
-            _stats["neg_ids_decoded"] = int(excl_bc.value.size)
-        elif neg_docs is not None:
-            from pyspark.sql import Observation
-
-            obs_neg = Observation(f"negstats_{uuid.uuid4().hex[:12]}")
-            neg_docs = neg_docs.observe(obs_neg, F.count(F.lit(1)).alias("neg_ids"))
-            _stats["_obs_neg"] = obs_neg
-
-    tau = float("-inf")
-    pruned = False
-    if prune and (mode == "or" or len(live) == 1):
-        # (single-term AND == OR, so it shares this branch; multi-term
-        # AND gets its own two plans below.) Negation prunes with a
-        # df-aware deeper tau and an A-POSTERIORI verification (below):
-        # exactness never depends on the witnesses surviving the anti-join.
-        # '~less' prunes by LOWERING tau by the less terms' total upper
-        # bound (see below). neg+less / within+less COMPOSE (r7): the
-        # deeper-tau k_eff and the less correction stack — tau then
-        # lower-bounds the k-th best FINAL score among survivors, and
-        # the a-posteriori verification (which compares the surviving
-        # k-th FINAL score against the composed tau) covers any
-        # correlation, exactly as for plain negation.
-        bstats = _term_block_stats(spark, st, wh, live)
-        ratio = avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
-        k_eff = k
-        keep_frac = 1.0  # P(a tau witness survives exclusion + docset)
-        if within_docs is not None:
-            # the docset knocks out witnesses exactly like exclusion
-            # does; its selectivity is EXACT (one narrow count job on
-            # the pushed-down scan), so the same deeper-tau formula
-            # applies with survival |S|/n. Correctness never depends
-            # on this estimate — the a-posteriori verification below
-            # covers any filter/term correlation.
-            n_within = within_docs.count()
-            if n_within == 0:
-                return _cache_df(_empty_results(spark))
-            keep_frac = min(1.0, n_within / max(n_docs, 1))
-        if neg:
-            # excluded docs can knock out up to sum(df_neg)/n of tau's
-            # witnesses; ask for proportionally deeper top_wands so ~k
-            # survive DESPITE binomial noise (margin 4*sqrt(k)+4 puts the
-            # shortfall probability well under 1%; a bare k/(1-rate) was
-            # measured to fall back ~25% of the time). Beyond the stored
-            # top_wands depth, impact ladders extend tau to any k_eff
-            # (so even "physics -the", k_eff ~ 1300, forms a tau); the
-            # a-posteriori verification below keeps it exact either way.
-            # no cap on neg_rate: impact ladders form a tau at ANY depth,
-            # and an impossible depth (rate -> 1, k_eff > corpus) simply
-            # yields no tau -> exhaustive. The old 0.98 cap (from the
-            # K_TOP-only era) made "-<99%-df term>" ask for a tau 5x too
-            # shallow and pay a guaranteed verify-fallback double scan.
-            neg_rate = min(1.0 - 1e-9, sum(dfs.get(t) or 0 for t in neg) / max(n_docs, 1))
-            keep_frac *= 1.0 - neg_rate  # independence heuristic only —
-            # k_eff tunes the FALLBACK RATE, never correctness
-        if keep_frac < 1.0:
-            keep_frac = max(keep_frac, 1e-9)
-            k_eff = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep_frac)
-        thetas, tau = _wand_thetas(live, idf_map, bstats, k_eff, ratio, int(st["cfg"].get("block_size") or 128))
-        if thetas is not None and live_less:
-            # '~less' correction: tau_base lower-bounds the k-th best
-            # POSITIVE sum (k distinct witness docs); each witness loses
-            # at most sum_t(idf_t * ub_wand_t) to the penalties, so
-            # tau_base - sum(UB_less) lower-bounds the k-th best FINAL
-            # score, and a top-k doc's positive sum >= its final >= tau.
-            # The positive-side block filter argument then applies
-            # verbatim; penalties are always decoded in full, so every
-            # kept doc's final score is exact.
-            bl = _term_block_stats(spark, st, wh, live_less)
-            if all(t in bl for t in live_less):
-                ub_corr_l = max(1.0, ratio)
-                tau -= sum(
-                    _idf(n_docs, dfs[t]) * bl[t]["ub_wand"] * ub_corr_l for t in live_less
-                )
-                ub_pos = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr_l for t in live}
-                thetas = _thetas_for_tau(live, idf_map, ub_pos, sum(ub_pos.values()), tau, ub_corr_l)
-            else:
-                thetas, tau = None, float("-inf")
-        if thetas is not None:
-            ub_corr = max(1.0, ratio)
-            imp = _impact_terms(spark, st, wh)
-            hot_live = [t for t in live if t in imp]
-            cold_live = [t for t in live if t not in imp]
-            ub = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr for t in live}
-            # probe gate: (a) the single-term tau leaves some hot term
-            # essentially unpruned (even its K_TOP-th best block survives)
-            # AND (b) at most two terms carry the upper-bound mass — with
-            # >=3 balanced hot terms NO tau can prune (theta_t =
-            # (tau - UB_others)/idf_t stays below every block max because
-            # UB_others alone approaches any achievable tau), so the probe
-            # job would be pure overhead (measured +0.5s on 3-term queries)
-            weak = any(
-                t in imp
-                and bstats[t]["n_blocks"] > 2 * len(bstats[t]["top_wands"])
-                and thetas[t] <= bstats[t]["top_wands"][-1]
-                for t in live
-            )
-            ubs_sorted = sorted(ub.values(), reverse=True)
-            two_term_shaped = sum(ubs_sorted[2:]) <= 0.15 * (sum(ubs_sorted[:2]) or 1.0)
-            est_postings = sum(bstats[t]["n_blocks"] for t in live) * int(
-                st["cfg"].get("block_size") or 128
-            )
-            probe_worth = probe is True or (
-                probe == "auto" and est_postings >= _PROBE_MIN_POSTINGS
-            )
-            probed = False
-            if weak and two_term_shaped and len(live) > 1 and hot_live and probe_worth and not live_less:
-                probed = True
-                tau2 = _probe_tau(spark, st, hot_live, idf_map, avgdl, k_eff)
-                if tau2 > tau:
-                    tau = tau2
-                    thetas = _thetas_for_tau(live, idf_map, ub, sum(ub.values()), tau, ub_corr)
-            # cost check: bound how many blocks these thetas actually
-            # KEEP — per-term impact ladders give a 2x-tight upper bound
-            # for impact-routed terms, top_wands a sound one for cold
-            # terms (theta <= 0 always keeps everything; >=3 balanced
-            # hot terms always land there). If the bound covers most of
-            # the candidate blocks, the plain exhaustive scan is
-            # strictly cheaper than the filtered/routed plan (no filter
-            # evaluation, no union, no impact read) — measured 1.15s vs
-            # 1.37s on "of and" with the single-term tau at 600k docs.
-            # probe=True forces the routed plan regardless (callers use
-            # it to exercise/evidence the at-scale path).
-            est_kept = sum(_est_kept_blocks(bstats[t], thetas[t], t in imp) for t in live)
-            tot = sum(bstats[t]["n_blocks"] for t in live)
-            if probe is True or est_kept < 0.6 * tot:
-                # routed scan: hot terms read a tau-prefix of their
-                # impact-ordered copy, cold terms the doc_id-ordered blocks
-                blocks = _routed_blocks(st, live, thetas, imp)
-                if est_kept <= _COALESCE_MAX_KEPT:
-                    # a ~k-block scan over a many-partition relation
-                    # (auto-buckets grow with the corpus; warm_postings'
-                    # cached relation keeps one partition per scan
-                    # split) otherwise launches a python-runner task per
-                    # partition, nearly all empty — measured at 2.4M
-                    # docs/65 buckets: pruned "the" paid 4+ waves of
-                    # empty decode round trips. coalesce is narrow
-                    # (no shuffle) and row-preserving.
-                    blocks = blocks.coalesce(4)
-                pruned = True
-            if _stats is not None:
-                # plan-choice observability (the --strats analog records
-                # WHAT the cost-based planner decided and on what numbers)
-                _stats["plan"] = ("routed+probe" if probed else "routed") if pruned else "exhaustive"
-                _stats["est_kept_blocks"] = est_kept
-    elif prune and mode == "and" and len(live) >= 2:
-        # Conjunctive pruning (VERDICT r4 #7), two exact plans by shape:
-        #
-        # 1. CANDIDATE-DRIVEN (selective AND, 'w0003 the'): the rarest
-        #    term's ids bound the result set; other terms' blocks are
-        #    range-semi-joined against them before any decode ->
-        #    O(df_rare) whatever the other terms' df. No tau involved.
-        # 2. PROBE TAU (conjunctive stopword pair, 'of and'): the k-th
-        #    best ALL-TERMS-HIT partial sum over a one-job prefix scan
-        #    lower-bounds the true conjunctive k-th best, and the OR
-        #    block filter (theta_t from the SUM of all terms' UBs)
-        #    applies verbatim: a true-AND doc with score >= tau keeps
-        #    every block (exact score AND complete hit count -> it
-        #    survives the n_terms_hit filter), while any doc that lost a
-        #    block has true score < tau and either fails the hit filter
-        #    or ranks below the >= k exact docs. Unlike negation, tau's
-        #    validity is a-priori — no verify-and-fallback needed.
-        #
-        # AND+neg composes with plan 1 ONLY (VERDICT r5 #6): the
-        # candidate-driven plan enumerates EVERY conjunctive match with
-        # a complete, exact score (each term's blocks that can contain a
-        # rare-term id survive the range semi-join), so dropping excluded
-        # docs afterwards — kernel docset, range-anti, or anti-join,
-        # whichever the exclusion planner picked — leaves every survivor
-        # exact and removes nothing that belongs: exact with NO tau and
-        # no verification step. Plan 2's tau is a-priori valid only for
-        # the UNfiltered conjunctive k-th best, so AND+neg shapes that
-        # miss plan 1's selectivity gate stay exhaustive. AND+less (r7)
-        # composes with plan 1 by the same argument as AND+neg: every
-        # conjunctive match carries a complete exact positive score, and
-        # the '~less' penalties are always decoded in full and
-        # subtracted afterwards — exact final scores for the entire
-        # conjunctive result set, no tau, no verification. Plan 2 stays
-        # gated on no-less (its tau has no less correction here).
-        # Single-term AND == OR and is handled above.
-        and_blocks = _and_candidate_blocks(spark, wh, st, live, dfs)
-        if and_blocks is not None:
-            blocks = and_blocks
-            pruned = True
-            if _stats is not None:
-                suffix = ("+neg" if neg else "") + ("+less" if live_less else "")
-                _stats["plan"] = "and-candidate" + suffix
-        elif neg or live_less:
-            pass  # probe-tau plan is unsound under exclusion and has no
-            # less correction on this path: exhaustive
-        else:
-            bstats = _term_block_stats(spark, st, wh, live)
-            ratio = avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
-            bsz = int(st["cfg"].get("block_size") or 128)
-            est_postings = sum(bstats[t]["n_blocks"] for t in live if t in bstats) * bsz
-            probe_worth = probe is True or (
-                probe == "auto" and est_postings >= _PROBE_MIN_POSTINGS
-            )
-            # within COMPOSES with this plan (r7): the probe tau is
-            # a-priori valid for the UNFILTERED conjunctive k-th best,
-            # so under a docset filter the probe asks for proportionally
-            # deeper witnesses (same k_eff formula as the OR path) and
-            # the generic a-posteriori verification below (surviving
-            # k-th score >= tau, else exhaustive rerun) makes the
-            # filtered result exact at any filter/term correlation.
-            if all(t in bstats for t in live) and probe_worth:
-                k_eff_and = k
-                if within_docs is not None:
-                    n_within = within_docs.count()
-                    if n_within == 0:
-                        return _cache_df(_empty_results(spark))
-                    keep = max(min(1.0, n_within / max(n_docs, 1)), 1e-9)
-                    k_eff_and = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep)
-                tau = _probe_tau_and(spark, st, wh, live, idf_map, avgdl, k_eff_and)
-                if tau > float("-inf"):
-                    ub_corr = max(1.0, ratio)
-                    ub = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr for t in live}
-                    thetas = _thetas_for_tau(live, idf_map, ub, sum(ub.values()), tau, ub_corr)
-                    imp = _impact_terms(spark, st, wh)
-                    est_kept = sum(
-                        _est_kept_blocks(bstats[t], thetas[t], t in imp) for t in live
-                    )
-                    tot = sum(bstats[t]["n_blocks"] for t in live)
-                    if probe is True or est_kept < 0.6 * tot:
-                        blocks = _routed_blocks(st, live, thetas, imp)
-                        pruned = True
-                        if _stats is not None:
-                            _stats["plan"] = "and-probe"
-                            _stats["est_kept_blocks"] = est_kept
-    if _stats is not None:
-        _stats.setdefault("plan", "exhaustive")
-        _stats["tau"] = None if tau == float("-inf") else tau
+    excl_bc, neg_docs = None, None
+    if plan.neg_plan == "docset-kernel":
+        excl_bc = _neg_docset(spark, wh, st, plan.neg)
+    elif plan.neg_plan == "range-anti":
+        neg_docs = _neg_range_prune(spark, wh, st, plan.neg, live)
+    elif plan.neg_plan == "anti-join":
+        # no distinct(): LEFT ANTI is set-semantics already — deduping a
+        # stopword's half-million ids would add a full shuffle for nothing
+        neg_docs = _decode_blocks_ids_only(_postings_for(spark, wh, st, plan.neg))
+    if _stats is not None and excl_bc is not None:
+        # exclusion-side cost: the docset path's ids are on the driver
+        # (exact count now); the distributed plans get an Observation on
+        # the ids decode (read back in search_with_stats)
+        _stats["neg_ids_decoded"] = int(excl_bc.value.size)
+    elif _stats is not None and neg_docs is not None:
         from pyspark.sql import Observation
 
-        obs = Observation(f"qstats_{uuid.uuid4().hex[:12]}")
-        blocks = blocks.observe(
-            obs,
-            F.count(F.lit(1)).alias("blocks_decoded"),
-            F.sum("n_docs").alias("postings_decoded"),
+        obs_neg = Observation(f"negstats_{uuid.uuid4().hex[:12]}")
+        neg_docs = neg_docs.observe(obs_neg, F.count(F.lit(1)).alias("neg_ids"))
+        _stats["_obs_neg"] = obs_neg
+
+    if plan.thetas is not None:
+        blocks = _routed_blocks(st, live, plan.thetas, plan.impact)
+        if plan.est_kept_blocks <= _COALESCE_MAX_KEPT:
+            # a ~k-block scan over a many-partition relation (auto-buckets
+            # grow with the corpus; warm_postings' cached relation keeps
+            # one partition per scan split) otherwise launches a
+            # python-runner task per partition, nearly all empty —
+            # measured at 2.4M docs/65 buckets: pruned "the" paid 4+
+            # waves of empty decode round trips. coalesce is narrow (no
+            # shuffle) and row-preserving.
+            blocks = blocks.coalesce(4)
+    elif plan.seed is not None:
+        blocks = _and_candidate_blocks(spark, wh, st, live, plan.seed)
+    else:
+        blocks = _postings_for(spark, wh, st, live)
+    if _stats is not None:
+        blocks = _observe_blocks(blocks, _stats)
+
+    penalties = None
+    if plan.less:
+        penalties = (
+            _decode_score_partials(_postings_for(spark, wh, st, plan.less), plan.idf, avgdl)
+            .groupBy("doc_id").agg(F.sum("score").alias("penalty"))
         )
-        _stats["_obs"] = obs
 
     def _mk_topk(blocks_df: DataFrame) -> DataFrame:
         """Final top-k over a block relation — shared by the first
-        attempt and the verification fallback so '~less' penalties are
-        applied IDENTICALLY on both (the old fallback predated pruned
-        less-composition and would have dropped penalties)."""
-        partials = _decode_score_partials(blocks_df, idf_map, avgdl, excl_bc)
-        if not live_less:
-            return _agg_topk(
-                partials, len(live), mode, neg_docs, k, within_docs,
-                unique_docs=_docs_unique(st, live),
-            )
-        less_idf = {t: _idf(n_docs, dfs[t]) for t in live_less}
-        less_partials = _decode_score_partials(
-            _postings_for(spark, wh, st, live_less), less_idf, avgdl
+        attempt and the verification fallback so exclusions, the docset
+        and '~less' penalties apply IDENTICALLY on both."""
+        partials = _decode_score_partials(blocks_df, plan.idf, avgdl, excl_bc)
+        return _agg_topk(
+            partials, len(live), mode, neg_docs, k, within_docs,
+            unique_docs=_docs_unique(st, live), penalties=penalties,
         )
-        penalties = less_partials.groupBy("doc_id").agg(F.sum("score").alias("penalty"))
-        agg = partials.groupBy("doc_id").agg(
-            F.sum("score").alias("score"), F.sum("hits").alias("n_terms_hit")
-        )
-        if mode == "and":
-            agg = agg.filter(F.col("n_terms_hit") == len(live))
-        if neg_docs is not None:
-            agg = agg.join(neg_docs, "doc_id", "left_anti")
-        if within_docs is not None:
-            agg = agg.join(within_docs, "doc_id", "left_semi")
-        agg = agg.join(penalties, "doc_id", "left").withColumn(
-            "score", F.col("score") - F.coalesce(F.col("penalty"), F.lit(0.0))
-        )
-        return agg.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    if not pruned and _docs_unique(st, live):
+    if plan.strategy == "exhaustive" and _docs_unique(st, live):
         # zero-exchange single-term exhaustive path: parallelize the
         # decode of a hot term's single-partition block scan (see
         # _fan_out_blocks — bit-identical, volume-gated)
-        blocks = _fan_out_blocks(spark, blocks, dfs[live[0]])
+        blocks = _fan_out_blocks(spark, blocks, plan.dfs[live[0]])
 
     topk = _mk_topk(blocks)
-
-    needs_verify = pruned and (neg or within_docs is not None) and tau > float("-inf")
-    if needs_verify and pkey is not None:
-        # memoize the PRE-verification plan + tau (+ a lazy exhaustive
-        # fallback builder): a repeated call re-executes the pruned job
-        # and the a-posteriori check every time — plan reuse, not
-        # result reuse
-        _plan_cache_put(
-            st,
-            pkey,
-            {
-                "kind": "verify", "pre": topk, "tau": tau, "k": k,
-                "with_url": bool(with_url), "root": wh.root,
-                "fallback_fn": lambda: _mk_topk(_postings_for(spark, wh, st, live)),
-            },
-        )
-    if needs_verify:
-        # A-POSTERIORI VERIFICATION (exactness proof for pruned negation):
-        # every kept doc with POSITIVE-sum score >= tau has ALL its
-        # blocks kept (the block filter keeps any block whose bound
-        # reaches tau), so its score is exact; every pruned-away doc has
-        # true positive sum < tau. With '~less' composed, tau was ALSO
-        # lowered by the less terms' total upper bound, so a surviving
-        # FINAL score (positive - penalty, penalties always decoded in
-        # full) >= tau still implies every pruned doc ranks strictly
-        # below (its final <= its positive < tau). If the surviving
-        # top-k's k-th score >= tau, the k results are exact and nothing
-        # pruned can displace or tie them. On a shortfall (too many
-        # witnesses excluded) rerun exhaustively — the fallback rate is
-        # df-bounded by the k_eff choice above and recorded in
+    verified_entry = None
+    if plan.verify:
+        # A-POSTERIORI VERIFICATION (exactness proof for pruned negation
+        # and within): every kept doc with POSITIVE-sum score >= tau has
+        # ALL its blocks kept (the block filter keeps any block whose
+        # bound reaches tau), so its score is exact; every pruned-away
+        # doc has true positive sum < tau. With '~less' composed, tau was
+        # ALSO lowered by the less terms' total upper bound, so a
+        # surviving FINAL score (positive - penalty, penalties always
+        # decoded in full) >= tau still implies every pruned doc ranks
+        # strictly below (its final <= its positive < tau). If the
+        # surviving top-k's k-th score >= tau, the k results are exact
+        # and nothing pruned can displace or tie them. On a shortfall
+        # (too many witnesses excluded) rerun exhaustively — the fallback
+        # rate is bounded by the k_eff choice and recorded in
         # query_metrics.
         rows = topk.collect()
-        if len(rows) == k and float(rows[-1]["score"]) >= tau:
-            if _stats is not None:
-                _stats["prune_verified"] = True
-            # rows are already (score DESC, doc_id ASC); a LocalRelation
-            # preserves insertion order on collect, and re-sorting 10 rows
-            # through orderBy would cost a range-partitioning sampling job
-            topk = _values_df(
-                spark,
-                [f"({int(r['doc_id'])}L, {_sql_double(r['score'])})" for r in rows],
-                "doc_id, score",
-            )
+        if _verified(rows, k, plan.tau):
+            # memoize the PRE-verification plan + tau: a repeated call
+            # re-executes the pruned job and the check (plan reuse, not
+            # result reuse)
+            verified_entry = {"kind": "verify", "pre": topk, "tau": plan.tau}
+            topk = _rows_df(spark, rows)
         else:
+            # the exhaustive plan is memoized below (kind='df'): it is
+            # exact for any data, and this shape would fall short again
+            # on every repeat
             blocks = _postings_for(spark, wh, st, live)
             if _stats is not None:
-                _stats["prune_fallback"] = True
-                from pyspark.sql import Observation
-
-                obs = Observation(f"qstats_fb_{uuid.uuid4().hex[:12]}")
-                blocks = blocks.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("blocks_decoded"),
-                    F.sum("n_docs").alias("postings_decoded"),
-                )
-                _stats["_obs"] = obs
+                blocks = _observe_blocks(blocks, _stats)
             topk = _mk_topk(blocks)
+        if _stats is not None:
+            _stats["prune_verified" if verified_entry else "prune_fallback"] = True
 
     if with_url:
         topk = _attach_url(spark, st, wh.root, topk)
-    if not needs_verify:
+    if verified_entry is None:
         return _cache_df(topk)
+    if pkey is not None:
+        _plan_cache_put(st, pkey, verified_entry)
     return topk
 
 
@@ -1701,6 +1689,7 @@ def batch_search(
     qmap: dict[str, list[str]] = {}
     qneg: dict[str, list[str]] = {}
     qless: dict[str, list[str]] = {}
+    qtext: dict[str, str] = {}
     items = queries.items() if isinstance(queries, dict) else ((f"q{i}", q) for i, q in enumerate(queries))
     for qid, q in items:
         if _needs_rewrite(q):
@@ -1709,6 +1698,7 @@ def batch_search(
         qmap[str(qid)] = pos
         qneg[str(qid)] = neg
         qless[str(qid)] = less
+        qtext[str(qid)] = q
     all_terms = sorted({t for ts in qmap.values() for t in ts})
     all_neg = sorted({t for ts in qneg.values() for t in ts})
     all_less = sorted({t for ts in qless.values() for t in ts})
@@ -1720,18 +1710,9 @@ def batch_search(
     live = sorted(t for t in all_terms if t in dfs)
     if not live:
         return _bcache_df(_empty_batch_results(spark))
-    idf_map = {t: _idf(n_docs, dfs[t]) for t in live}
-
-    within_docs = None
-    if within is not None:
-        if isinstance(within, str):
-            within_docs = (
-                catalog.read_table(spark, wh.root, "docs")
-                .filter(F.expr(within))
-                .select("doc_id")
-            )
-        else:
-            within_docs = within.select("doc_id")
+    live_less = [t for t in all_less if t in dfs]
+    idf_map = {t: _idf(n_docs, dfs[t]) for t in live + live_less}
+    within_docs = _within_docs(spark, wh, within)
 
     # ---- per-query WAND thetas + route-out decision -------------------
     # The shared scan decodes each term ONCE under the union (min) of
@@ -1747,101 +1728,64 @@ def batch_search(
     # routed queries score through search() (pruned, single-query-exact)
     # and union back in — still ONE action, per-query top-k unchanged.
     plan, blocks_total = "exhaustive", None
-    theta_map: dict[str, dict[str, float] | None] = {}
+    theta_map: dict[str, dict[str, float]] = {}
     tau_map: dict[str, float] = {}
     est_own: dict[str, float] = {}
     bstats = None
     imp: set = set()
     # within COMPOSES with the batch-pruned shared scan (r7): per-query
     # thetas form at a filter-deepened depth (the batch-global docset's
-    # keep fraction, same k_eff formula as search()) and a BATCHED
-    # a-posteriori verification below checks every pruned query's k-th
-    # surviving score against its tau, rerunning only the failures —
-    # shared-scan amortization with per-query exactness.
-    k_theta, keep_within = k, 1.0
+    # keep fraction) and a BATCHED a-posteriori verification below
+    # checks every pruned query's k-th surviving score against its tau,
+    # rerunning only the failures — shared-scan amortization with
+    # per-query exactness.
+    n_within = None
     if prune and mode == "or":
-        bstats = _term_block_stats(spark, st, wh, live)
+        bstats = _term_block_stats(spark, st, wh, live + live_less)
         if not all(t in bstats for t in live):
             bstats = None
-        if bstats is not None and within_docs is not None:
+        elif within_docs is not None:
             n_within = within_docs.count()
             if n_within == 0:
                 return _empty_batch_results(spark)
-            keep_within = max(min(1.0, n_within / max(n_docs, 1)), 1e-9)
-            k_theta = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep_within)
     if bstats is not None:
-        ratio = avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
-        bsz = int(st["cfg"].get("block_size") or 128)
+        ratio, bsz = _wand_ratio(st), _block_size(st)
         imp = _impact_terms(spark, st, wh)
-        live_less_all = [t for t in all_less if t in dfs]
-        bless = _term_block_stats(spark, st, wh, live_less_all) if live_less_all else {}
         for qid, ts in qmap.items():
             lq = [t for t in ts if t in dfs]
-            if not lq:
-                continue
-            thetas = None
-            route_thetas = None
+            lneg = [t for t in qneg[qid] if t in dfs]
             lless = [t for t in qless[qid] if t in dfs]
-            if not qneg[qid]:
-                idf_q = {t: idf_map[t] for t in lq}
-                thetas, _tau = _wand_thetas(lq, idf_q, bstats, k_theta, ratio, bsz)
-                if thetas is not None and lless:
-                    # same correction as search(): tau lower-bounds the
-                    # k-th best POSITIVE sum; each witness loses at most
-                    # sum(UB_less) to penalties, so tau - sum(UB_less)
-                    # lower-bounds the k-th best FINAL score
-                    if all(t in bless for t in lless):
-                        ubc = max(1.0, ratio)
-                        _tau -= sum(
-                            _idf(n_docs, dfs[t]) * bless[t]["ub_wand"] * ubc for t in lless
-                        )
-                        ub_pos = {t: idf_q[t] * bstats[t]["ub_wand"] * ubc for t in lq}
-                        thetas = _thetas_for_tau(lq, idf_q, ub_pos, sum(ub_pos.values()), _tau, ubc)
-                    else:
-                        thetas = None
-                route_thetas = thetas
-            else:
-                # '-neg' (and, r8, neg+less) query: UNPRUNABLE in-batch
-                # (its shared-scan theta stays -inf — the shared scan has
-                # no batched analog of search()'s a-posteriori
-                # verification) but ROUTABLE: search() prunes it with the
-                # df-aware deeper tau + verify, composing the '~less'
-                # correction exactly as its own planner does. One such
-                # query otherwise anchors its positive terms at full
-                # decode for the WHOLE batch ("the -biology" forces
-                # "the" exhaustive for all 25 reference queries — the r5
-                # 758 ms/query regression's root shape; VERDICT r7 #6
-                # closed the same hole for the neg+less compound shape).
-                # Estimate its routed cost with the same composed plan
-                # search() runs: k_eff deepening for the exclusion, tau
-                # lowered by the less terms' upper bound.
-                neg_rate = min(
-                    1.0 - 1e-9,
-                    sum(dfs.get(t) or 0 for t in qneg[qid]) / max(n_docs, 1),
-                )
-                keep = max(1.0 - neg_rate, 1e-9)
-                k_eff = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep)
-                idf_q = {t: idf_map[t] for t in lq}
-                rt, _tau_r = _wand_thetas(lq, idf_q, bstats, k_eff, ratio, bsz)
-                if rt is not None and lless:
-                    if all(t in bless for t in lless):
-                        ubc = max(1.0, ratio)
-                        _tau_r -= sum(
-                            _idf(n_docs, dfs[t]) * bless[t]["ub_wand"] * ubc for t in lless
-                        )
-                        ub_pos = {t: idf_q[t] * bstats[t]["ub_wand"] * ubc for t in lq}
-                        rt = _thetas_for_tau(lq, idf_q, ub_pos, sum(ub_pos.values()), _tau_r, ubc)
-                    else:
-                        rt = None
-                route_thetas = rt
-            theta_map[qid] = thetas
-            if thetas is not None:
-                tau_map[qid] = _tau  # composed (post-less-correction) tau
-                # — consumed by the within verification below
-            if route_thetas is not None:
-                est_own[qid] = sum(
-                    _est_kept_blocks(bstats[t], route_thetas[t], t in imp) for t in lq
-                )
+            # the same tau/thetas search()'s planner forms for this query
+            # (within and '-neg' deepen k_eff, '~less' lowers tau)
+            keep = _keep_frac(n_docs, n_within, sum(dfs[t] for t in lneg))
+            _, thetas, tau = _tau_thetas(lq, lless, idf_map, bstats, k, keep, ratio, bsz)
+            if thetas is None:
+                continue
+            if not lneg:
+                theta_map[qid], tau_map[qid] = thetas, tau
+            # a '-neg' query (and, r8, neg+less) stays UNPRUNED in-batch:
+            # its shared-scan theta stays -inf, since the shared scan has
+            # no batched analog of search()'s a-posteriori verification.
+            # It is ROUTABLE: search() prunes it with exactly these
+            # thetas + verify. One such query otherwise anchors its
+            # positive terms at full decode for the WHOLE batch ("the
+            # -biology" forces "the" exhaustive for all 25 reference
+            # queries — the r5 758 ms/query regression's root shape).
+            est_own[qid] = _routing_cost(bstats, thetas, imp, lq)[0]
+
+    def _theta_union(excl: set) -> dict[str, float]:
+        """Shared-scan thetas over the queries NOT in excl: a block of
+        term t survives when ANY query keeps it (an unpruned query
+        contributes -inf)."""
+        th: dict[str, float] = {}
+        for qid, ts in qmap.items():
+            if qid in excl:
+                continue
+            thetas = theta_map.get(qid)
+            for t in ts:
+                if t in dfs:
+                    th[t] = min(th.get(t, float("inf")), thetas[t] if thetas else float("-inf"))
+        return th
 
     routed_out: list[str] = []
     if bstats is not None and est_own:
@@ -1853,24 +1797,11 @@ def batch_search(
             as saving when the executed plan actually shrinks. (The r5
             regression's shape: removing 'the -biology' doesn't help
             while another query still holds 'the' in an exhaustive scan.)"""
-            th: dict[str, float] = {}
-            for qid, ts in qmap.items():
-                if qid in excl:
-                    continue
-                lq = [t for t in ts if t in dfs]
-                if not lq:
-                    continue
-                thetas = theta_map.get(qid)
-                for t in lq:
-                    th[t] = min(
-                        th.get(t, float("inf")),
-                        thetas[t] if thetas is not None else float("-inf"),
-                    )
+            th = _theta_union(excl)
             if not th:
                 return 0.0
-            est = sum(_est_kept_blocks(bstats[t], th[t], t in imp) for t in th)
-            tot = sum(bstats[t]["n_blocks"] for t in th)
-            return est if est < 0.6 * tot else tot
+            est, tot, pays = _routing_cost(bstats, th, imp, list(th))
+            return est if pays else tot
 
         base = _shared_cost(set())
         while True:
@@ -1892,15 +1823,10 @@ def batch_search(
     if routed_out:
         parts = []
         for qid in routed_out:
-            qstr = " ".join(
-                qmap[qid]
-                + ["-" + t for t in qneg[qid]]
-                + ["~" + t for t in qless[qid]]
-            )
-            routed_specs.append((qid, qstr))
+            routed_specs.append((qid, qtext[qid]))
             # within rides along: the routed query must honor the same
             # batch-global docset (search prunes + verifies it itself)
-            res = search(spark, wh, qstr, k=k, mode=mode, prune=True, within=within_docs)
+            res = search(spark, wh, qtext[qid], k=k, mode=mode, prune=True, within=within_docs)
             parts.append(res.select(F.lit(qid).alias("query_id"), "doc_id", "score"))
             del qmap[qid], qneg[qid], qless[qid]
         routed_df = parts[0]
@@ -1932,33 +1858,16 @@ def batch_search(
 
     blocks = _postings_for(spark, wh, st, live)
     if bstats is not None and live:
-        theta_u: dict[str, float] = {}
-        for qid, ts in qmap.items():
-            thetas = theta_map.get(qid)
-            for t in ts:
-                if t in dfs:
-                    theta_u[t] = min(
-                        theta_u.get(t, float("inf")),
-                        thetas[t] if thetas is not None else float("-inf"),
-                    )
-        est_kept = sum(_est_kept_blocks(bstats[t], theta_u[t], t in imp) for t in live)
-        blocks_total = sum(bstats[t]["n_blocks"] for t in live)
-        if est_kept < 0.6 * blocks_total:
+        theta_u = _theta_union(set())
+        _, blocks_total, pays = _routing_cost(bstats, theta_u, imp, live)
+        if pays:
             blocks = _routed_blocks(st, live, theta_u, imp)
             plan = "routed-batch"
     if routed_out:
         plan = f"{plan}+routed-out:{len(routed_out)}"
     if _stats is not None:
         _stats.update({"plan": plan, "blocks_total": blocks_total, "routed_out": list(routed_out)})
-        from pyspark.sql import Observation
-
-        obs = Observation(f"bstats_{uuid.uuid4().hex[:12]}")
-        blocks = blocks.observe(
-            obs,
-            F.count(F.lit(1)).alias("blocks_decoded"),
-            F.sum("n_docs").alias("postings_decoded"),
-        )
-        _stats["_obs"] = obs
+        blocks = _observe_blocks(blocks, _stats)
 
     scored = _decode_score_terms(blocks, idf_map, avgdl)
     joined = scored.join(F.broadcast(qterms), "term")
@@ -1977,8 +1886,7 @@ def batch_search(
             "query_id, term",
         )
         less_terms = sorted({t for _, t in less_pairs})
-        less_idf = {t: _idf(n_docs, dfs[t]) for t in less_terms}
-        lscored = _decode_score_terms(_postings_for(spark, wh, st, less_terms), less_idf, avgdl)
+        lscored = _decode_score_terms(_postings_for(spark, wh, st, less_terms), idf_map, avgdl)
         pen = (
             lscored.join(F.broadcast(lmap), "term")
             .groupBy("query_id", "doc_id")
@@ -2094,13 +2002,8 @@ def batch_search(
             _stats["within_verified"] = len(tau_map) - len(redo)
             _stats["within_fallbacks"] = list(redo)
         for qid in redo:
-            qstr = " ".join(
-                qmap[qid]
-                + ["-" + t for t in qneg[qid]]
-                + ["~" + t for t in qless[qid]]
-            )
             fixed = search(
-                spark, wh, qstr, k=k, mode=mode, prune=False, within=within_docs
+                spark, wh, qtext[qid], k=k, mode=mode, prune=False, within=within_docs
             ).collect()
             by_q[qid] = [
                 {"query_id": qid, "doc_id": r["doc_id"], "score": r["score"]} for r in fixed
@@ -2231,26 +2134,34 @@ def search_with_stats(
     prune/probe default to MATCH search()'s defaults — the instrumented
     path must measure the same plan a production search runs."""
     wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
-    st = _wh_state(spark, wh)
     info: dict = {}
     t0 = time.time()
     rows = search(
         spark, wh, query, k=k, mode=mode, prune=prune, probe=probe, within=within, _stats=info
     ).collect()
-    info["wall_ms"] = (time.time() - t0) * 1000.0
-    obs = info.pop("_obs", None)
+    wall_ms = (time.time() - t0) * 1000.0
+    plan: QueryPlan = info.pop("_plan")
     empty = len(rows) == 0
-    info["blocks_decoded"], info["postings_decoded"] = _obs_counts(obs, known_empty=empty)
+    info.update(
+        {
+            "query": plan.query, "k": k, "mode": mode, "prune": prune, "terms": plan.live,
+            "plan": plan.label,  # e.g. "routed+docset-kernel" / "exhaustive+anti-join"
+            "neg_plan": plan.neg_plan,
+            "tau": None if plan.tau == float("-inf") else plan.tau,
+            "est_kept_blocks": plan.est_kept_blocks,
+            "blocks_total": plan.blocks_total,
+            "rows_returned": len(rows),
+            "wall_ms": wall_ms,
+        }
+    )
+    if within is not None:
+        info["within"] = within if isinstance(within, str) else "<docset>"
+    info["blocks_decoded"], info["postings_decoded"] = _obs_counts(info.pop("_obs", None), known_empty=empty)
     obs_neg = info.pop("_obs_neg", None)
     if obs_neg is not None:
         info["neg_ids_decoded"] = _obs_counts(
             obs_neg, ("neg_ids",), known_empty=empty, allow_eliminated=True
         )[0]
-    bstats = _term_block_stats(spark, st, wh, info.get("terms") or [])
-    info["blocks_total"] = int(sum(b["n_blocks"] for b in bstats.values())) or None
-    info["rows_returned"] = len(rows)
-    if info.get("neg_plan"):  # e.g. "routed+docset-kernel" / "exhaustive+anti-join"
-        info["plan"] = f"{info.get('plan', 'exhaustive')}+{info['neg_plan']}"
     _write_query_metrics(wh, info)
     return rows, info
 
@@ -2325,6 +2236,13 @@ def batch_search_with_stats(
     return rows, info
 
 
+_NEG_PLAN_TEXT = {
+    "docset-kernel": "broadcast docset, kernel-side exclusion",
+    "range-anti": "range-pruned anti-join: excluded blocks semi-joined vs candidates",
+    "anti-join": "LEFT ANTI, doc_ids-only decode",
+}
+
+
 def plan_summary(
     spark: SparkSession,
     warehouse: str | Warehouse,
@@ -2332,79 +2250,56 @@ def plan_summary(
     k: int = 10,
     mode: str = "or",
     prune: bool = True,
+    within: DataFrame | str | None = None,
 ) -> str:
     """The `--strats` analog (reference summarize_runs cli.rs:326-341,
-    dispatch cli.rs:439-441): a human-readable description of the planned
-    query — terms, buckets, dfs, WAND bounds — without running it."""
+    dispatch cli.rs:439-441): the plan search() executes for the same
+    arguments — terms, buckets, dfs, positive and exclusion strategy,
+    tau and per-term thetas — formatted from the same plan value
+    (_plan_query). Runs search()'s planning jobs (term metadata read,
+    within count, probe) but not the scoring job."""
     wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
     st = _wh_state(spark, wh)
-    if _needs_rewrite(query):
-        expanded = expand_wildcards(spark, wh, query)
-        summary = plan_summary(spark, wh, expanded, k=k, mode=mode, prune=prune)
-        return f"rewrite: {query!r} -> {expanded!r}\n{summary}"
-    pos, neg, less = parse_query(query)
-    n_docs = int(st["stats"]["n_docs"])
-    dfs = _term_dfs(spark, st, wh, pos + less + neg)
+    p = _plan_query(spark, wh, st, query, k, mode, prune, "auto", within)
+    pos, neg, less = parse_query(p.query)
     buckets = _term_buckets(spark, st, pos + neg + less)
-    bstats = _term_block_stats(spark, st, wh, [t for t in pos if t in dfs]) if prune else {}
-    lines = [f"query: {query!r}  k={k} mode={mode} prune={prune}  corpus n_docs={n_docs}"]
+    bstats = _term_block_stats(spark, st, wh, p.live) if p.live else {}
+    lines = [f"rewrite: {query!r} -> {p.query!r}"] if p.query != query else []
+    lines.append(
+        f"query: {p.query!r}  k={k} mode={mode} prune={prune}  corpus n_docs={int(st['stats']['n_docs'])}"
+    )
     for t in pos:
-        if t not in dfs:
+        if t not in p.dfs:
             lines.append(f"  +{t}: NOT IN CORPUS (dropped)")
             continue
-        idf = _idf(n_docs, dfs[t])
-        line = f"  +{t}: df={dfs[t]} idf={idf:.4f} bucket={buckets[t]}"
+        line = f"  +{t}: df={p.dfs[t]} idf={p.idf[t]:.4f} bucket={buckets[t]}"
         if t in bstats:
-            bs = bstats[t]
-            line += f" blocks={bs['n_blocks']} ub={idf * bs['ub_wand']:.4f}"
+            line += f" blocks={bstats[t]['n_blocks']} ub={p.idf[t] * bstats[t]['ub_wand']:.4f}"
         lines.append(line)
     for t in less:
-        lines.append(f"  ~{t}: df={dfs.get(t, 0)} (negative-weight scorer)")
-    sum_neg_all = sum(dfs.get(x) or 0 for x in neg)
-    live_pos = [t for t in pos if t in dfs]
+        lines.append(f"  ~{t}: df={p.dfs.get(t, 0)} (negative-weight scorer)")
     for t in neg:
-        if (dfs.get(t) or 0) and sum_neg_all <= _NEG_DOCSET_MAX_POSTINGS:
-            route = "broadcast docset, kernel-side exclusion"
-        elif _neg_range_eligible(spark, wh, st, neg, dfs, live_pos):
-            route = "range-pruned anti-join (excluded blocks semi-joined vs candidates)"
-        else:
-            route = "LEFT ANTI, doc_ids-only decode"
-        lines.append(f"  -{t}: bucket={buckets[t]} df={dfs.get(t, 0)} ({route})")
+        lines.append(f"  -{t}: bucket={buckets[t]} df={p.dfs.get(t, 0)}")
+    if within is not None:
+        n = "" if p.n_within is None else f" ({p.n_within} docs)"
+        lines.append(f"  within: {within if isinstance(within, str) else '<docset>'!r}{n}")
+    lines.append(f"  plan: {p.label}")
+    if p.seed is not None:
+        lines.append(
+            f"  AND: candidate-driven (seed={p.seed!r} df={p.dfs[p.seed]}; other terms' "
+            "blocks range-semi-joined vs seed ids before decode)"
+        )
+    if p.neg_plan:
+        lines.append(f"  exclusion: {p.neg_plan} ({_NEG_PLAN_TEXT[p.neg_plan]})")
     if prune:
-        live = [t for t in pos if t in dfs]
-        if mode == "and" and len(live) >= 2 and not less:
-            rare = _and_candidate_rare(spark, wh, st, live, dfs)
-            if rare is not None:
-                lines.append(
-                    f"  AND: candidate-driven (seed={rare!r} df={dfs[rare]}; other terms' "
-                    "blocks range-semi-joined vs seed ids before decode)"
-                    + (" composed with exclusion — exact scores precede the filter" if neg else "")
-                )
-            elif neg:
-                # probe tau is a-priori valid only for the UNfiltered
-                # conjunctive k-th best — mirror search(): exhaustive
-                lines.append(
-                    "  AND+neg: exhaustive (no candidate seed; the conjunctive "
-                    "probe tau is unsound under exclusion)"
-                )
-            else:
-                lines.append(
-                    "  AND: probe-gated conjunctive tau (prefix scan of all terms, "
-                    "k-th best all-terms-hit sum) else exhaustive"
-                )
-            return "\n".join(lines)
-        idf_map = {t: _idf(n_docs, dfs[t]) for t in live}
-        avgdl_q = float(st["stats"]["avgdl"])
-        ratio = avgdl_q / max(float(st["cfg"].get("wand_avgdl") or avgdl_q), 1e-9)
-        thetas, tau = _wand_thetas(live, idf_map, bstats, k, ratio, int(st["cfg"].get("block_size") or 128))
-        if thetas is None:
-            lines.append("  WAND: no pruning applicable")
-        else:
-            imp = _impact_terms(spark, st, wh)
-            lines.append(f"  WAND: tau={tau:.4f} (driver-side)")
-            for t in live:
-                route = "impact-prefix" if t in imp else "doc-ordered"
-                lines.append(f"    {t}: theta={thetas[t]:.4f} route={route}")
+        tau = "none" if p.tau == float("-inf") else repr(p.tau)
+        lines.append(
+            f"  WAND: tau={tau} k_eff={p.k_eff} est_kept_blocks={p.est_kept_blocks} of {p.blocks_total}"
+            + ("; verified a posteriori, exhaustive rerun on shortfall" if p.verify else "")
+        )
+        for t, theta in (p.thetas or {}).items():
+            route = "impact-prefix" if t in p.impact else "doc-ordered"
+            lines.append(f"    {t}: theta={theta:.4f} route={route}")
     return "\n".join(lines)
 
 

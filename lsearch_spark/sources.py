@@ -55,8 +55,3 @@ def long_listing(df: DataFrame, url_col: str = "url", ts_col: str = "warc_ts") -
         basename(url_col).alias("title"),
         F.col("lang"),
     )
-
-
-def score_listing(df: DataFrame, score_col: str = "score", url_col: str = "url") -> DataFrame:
-    """The `--score` sink projection: [score] path (cli.rs:573-585)."""
-    return df.select(F.col(score_col).alias("score"), F.col(url_col).alias("url"))

@@ -60,10 +60,6 @@ def tokens_col(col: Column | str) -> Column:
     return F.coalesce(arr, F.array())
 
 
-def doc_len_col(col: Column | str) -> Column:
-    return F.size(tokens_col(col))
-
-
 # Explicit separator-character set (same bytes as SEP_RE_*), for the
 # Arrow trim kernel below.
 SEP_CHARS = "".join(

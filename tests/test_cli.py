@@ -36,9 +36,10 @@ def test_cli_build_and_search(cli_env, capsys):
           "--buckets", "4", "--block-size", "32", "--hot-df", "64", "--salts", "2"])
     assert "index built" in capsys.readouterr().out
     _run(["search", "--warehouse", cli_env["wh"], "--query", "biology -chemistry",
-          "-k", "5", "--stats", "--strats"])
+          "-k", "5", "--stats", "--strats", "--within", "lang = 'en'"])
     out = capsys.readouterr().out
     assert "WAND" in out and "-- stats:" in out
+    assert "within: \"lang = 'en'\"" in out
 
 
 def test_cli_phrase_and_batch(cli_env, capsys):

@@ -998,15 +998,94 @@ def test_and_probe_plan_prunes_stopword_pair(spark, wh, pyidx):
     assert_rank_identical(rows, bm25_topk(pyidx, "the of", k=10, mode="and"))
 
 
-def test_plan_summary_reports_and_plans(spark, wh):
-    """--strats parity for the conjunctive planner: plan_summary must
-    name the same AND plan search() will take."""
-    from lsearch_spark.query import plan_summary
+def _plan_shapes(seed: int) -> list[tuple[str, str, str | None]]:
+    """(query, mode, within) shapes for the plan parity test: one per
+    (mode, term pair, operator) combination with seeded term choices,
+    plus fixed shapes whose --strats output once drifted from the
+    executed plan."""
+    import itertools
+    import random
 
-    s1 = plan_summary(spark, wh, "tiebreak the", mode="and")
-    assert "candidate-driven" in s1 and "'tiebreak'" in s1, s1
-    s2 = plan_summary(spark, wh, "the of", mode="and")
-    assert "conjunctive tau" in s2, s2
+    rng = random.Random(seed)
+    hot = ["the", "of", "and", "biology"]
+    mid = ["physics", "chemistry", "quantum", "neural", "glacier", "tokyo"]
+    rare = ["tiebreak", "zyzzyva", "flux", "w0881"]
+    pairs = {
+        "stopwords": lambda: rng.sample(hot, 2),
+        "rare+hot": lambda: [rng.choice(rare), rng.choice(hot)],
+        "missing": lambda: ["absentterm", rng.choice(hot + mid)],
+    }
+    ops = {
+        "plain": lambda ts: (ts, None),
+        "neg": lambda ts: (ts + ["-" + rng.choice([t for t in hot + mid if t not in ts])], None),
+        "less": lambda ts: (ts + ["~" + rng.choice([t for t in hot + mid if t not in ts])], None),
+        "neg+less": lambda ts: (
+            ts + ["-" + rng.choice(mid), "~" + rng.choice([t for t in hot if t not in ts])], None
+        ),
+        "within": lambda ts: (ts, rng.choice(["lang = 'en'", "lang = 'de'"])),
+    }
+    shapes = [
+        ("of and", "or", None), ("physics -the", "or", None), ("the ~of", "or", None),
+        ("tiebreak the ~of", "and", None), ("the -biology", "or", None), ("of and", "and", None),
+    ]
+    for mode, pair, op in itertools.product(("or", "and"), pairs, ops):
+        ts, within = ops[op](pairs[pair]())
+        shapes.append((" ".join(ts), mode, within))
+    return shapes
+
+
+def test_plan_summary_matches_executed_plan(spark, whbig, pyidx_big):
+    """--strats parity: for every shape, the strategy and tau that
+    plan_summary prints are the plan and tau search_with_stats records
+    for the same arguments — both read the one planner, so nothing can
+    drift (OR/AND; plain, -neg, ~less, neg+less, within; stopword pairs,
+    rare+hot pairs, missing terms)."""
+    import re
+
+    from lsearch_spark.query import plan_summary, search_with_stats
+
+    shapes = _plan_shapes(seed=20261017)
+    assert len(shapes) >= 24
+    for q, mode, within in shapes:
+        s = plan_summary(spark, whbig, q, k=10, mode=mode, within=within)
+        rows, info = search_with_stats(spark, whbig, q, k=10, mode=mode, within=within)
+        printed_plan = re.search(r"^  plan: (\S+)$", s, re.M).group(1)
+        printed_tau = re.search(r"WAND: tau=(\S+)", s).group(1)
+        assert printed_plan == info["plan"], (q, mode, within, s, info)
+        if printed_plan.startswith("and-candidate"):
+            assert "candidate-driven (seed=" in s, s
+        if info["tau"] is None:
+            assert printed_tau == "none", (q, mode, within, s, info)
+        else:
+            assert math.isclose(float(printed_tau), info["tau"], rel_tol=1e-9), (q, mode, within, s, info)
+        if within is None:
+            assert_rank_identical(rows, bm25_topk(pyidx_big, q, k=10, mode=mode)), (q, mode)
+
+
+def test_verify_fallback_memoizes_exhaustive_plan(spark, whbig, pyidx_big):
+    """A memoized pruned '-neg' shape whose a-posteriori verification
+    falls short is re-planned as the exhaustive plan (exact for any
+    data): its repeat runs ONE scoring job instead of the pruned job
+    plus the fallback, and stays rank-identical to the oracle."""
+    from lsearch_spark.query import _WH_CACHE, invalidate_cache, search, search_with_stats
+
+    q = "the -of"
+    _, info = search_with_stats(spark, whbig, q, k=10)
+    assert info["plan"].startswith("routed") and info.get("prune_fallback"), info
+    invalidate_cache(whbig.root)
+    first = search(spark, whbig, q, k=10).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("verify-fallback-repeat", "verify-fallback-repeat")
+    try:
+        second = search(spark, whbig, q, k=10).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("verify-fallback-repeat")) == 1
+    hits = [v for kk, v in _WH_CACHE[whbig.root]["plans"].items() if kk[:2] == (q, 10)]
+    assert len(hits) == 1 and hits[0]["kind"] == "df", hits
+    want = bm25_topk(pyidx_big, q, k=10)
+    assert_rank_identical(first, want)
+    assert_rank_identical(second, want)
 
 
 def test_bucket_layouts_equivalent(spark, tmp_path):
